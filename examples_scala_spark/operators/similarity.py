@@ -850,40 +850,6 @@ def label_centroids(emb: DataFrame, dim: int = 64,
                  .alias("centroid"))
     )
 
-# ---------------------------------------------------------------------
-# Johnson-Lindenstrauss sign projection (dimensionality reduction)
-# ---------------------------------------------------------------------
-
-def rp_sign(k: int, d: int) -> float:
-    """Deterministic ±1 projection-matrix entry for (output dim k,
-    input dim d) — same integer-hash stream as the LSH hyperplanes,
-    offset so the two matrices are uncorrelated."""
-    return 1.0 if _plane_component(1000 + k, d) >= 0 else -1.0
-
-
-def rp_project(emb: DataFrame, out_dim: int = 16, dim: int = 64,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """Johnson-Lindenstrauss random projection: dim -> out_dim with a
-    deterministic ±1 sign matrix (Achlioptas' database-friendly JL —
-    no gaussians, exact arithmetic on the input floats). The 1/sqrt(m)
-    JL scale factor is dropped because cosine is scale-invariant.
-
-    Scale shape: a pure narrow map — out_dim fused JVM folds per row
-    inside whole-stage codegen, no Python, no shuffle; the sign matrix
-    is (out_dim x dim) literals riding the plan. At 100 TB this is the
-    cheap first stage that cuts every downstream ANN distance
-    computation (and candidate shuffle width) by dim/out_dim, paying
-    only the JL distortion ~sqrt(8 ln n / out_dim) quantified by
-    ann_recall_rp."""
-    v = F.col(vec_col).cast("array<double>")
-    comps = []
-    for kk in range(out_dim):
-        signs = F.array(*[F.lit(rp_sign(kk, d)) for d in range(dim)])
-        comps.append(F.aggregate(F.zip_with(v, signs, lambda a, b: a * b),
-                                 F.lit(0.0), lambda acc, x: acc + x))
-    return emb.select(F.col(id_col), F.array(*comps).alias("embedding_rp"))
-
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.35,
                    centroid_mod: int = 23, id_col: str = "vec_id",

@@ -18,15 +18,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
-    """Assert each fragment appears in PushedFilters of the scan."""
-    plan = explain_str(df)
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    joined = "\n".join(pushed)
-    for frag in fragments:
-        assert frag in joined, f"filter {frag!r} not pushed; plan:\n{plan}"
-
-
 # every physical node that ships rows across the JVM<->Python boundary
 # — matching only BatchEvalPython let vectorized Python (ArrowEval,
 # MapInPandas, ...) slip past the "no accidental Python" assertion

@@ -32,7 +32,7 @@ from .session import tune
 from .sources.tables import (
     load_table, normalize_ts, sensor_readings, SENSOR_READINGS_SQL)
 from .operators import aggregations as agg
-from .operators import dedup, joins, late_data, similarity, text, multimodal
+from .operators import dedup, joins, similarity, text, multimodal
 from .operators.aggregations import dec
 from .functions import scalar as scalar_fn
 
@@ -62,39 +62,6 @@ def _sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     return load_table(spark, sf_dir, name)
-
-
-def _rebalance_scan(df: DataFrame) -> DataFrame:
-    """UNUSED since r13 — kept as the record of a measured rejection.
-
-    The r12 idea (guide §2.5, input skew / unsplittable files): when
-    the scan yields fewer partitions than cores (single-row-group
-    parquet fixtures), inject `repartition(defaultParallelism)` after
-    the pushed filters so partial aggregates run core-wide; a no-op at
-    production scale where splits >= cores.
-
-    The r13 quiet-window interleaved A/B (18/18 pairs, same session,
-    alternating per run) REVERSED the r12 in-session claim: the
-    identity form beat the rebalanced form on every TPC-H head, 20-40%
-    (q1 0.95 vs 1.10 s, q3 0.81 vs 1.17, q5 0.81 vs 1.40, q10 0.71 vs
-    1.13, q18 1.05 vs 1.64, w_avg_temp 1.05 vs 1.17 — best-of-3 each).
-    The round-robin exchange of the whole filtered scan plus the
-    per-call `.rdd.getNumPartitions()` physical-plan compile cost more
-    than the extra parallelism won back at bench volume, and at scale
-    the helper never fires by construction — so the call sites were
-    removed outright (OPTIMIZATION_r13.md). Plan shape returns to r11.
-
-    BATCH-ONLY if ever reused: `.rdd` throws on a streaming DataFrame
-    (guarded below, r12 VERDICT #4); the decision depends on core
-    count and fixture layout, so plan dumps record defaultParallelism
-    in their header (tools/dump_plans.py, r12 ADVICE)."""
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:  # plan-only, no job
-        return df.repartition(par)
-    return df
 
 
 SENSORS_CTE = f"WITH sensors AS ({SENSOR_READINGS_SQL})"
@@ -3756,64 +3723,50 @@ def _staged_events_stream_quartile(spark, sf_dir, n_files: int = 4,
     import shutil
     import tempfile
 
-    ev = (load_table(spark, sf_dir, "events")
-          .withColumn("ts", F.expr("unix_micros(ts)")))
-    n = ev.count()
-    b = (ev.withColumn("rn", F.row_number().over(
-            Window.orderBy("ts", "event_id")))
-         .withColumn("bucket",
-                     F.expr(f"CAST(((rn - 1) * {n_files}) DIV {n} AS INT)"))
-         .select("event_id", "ts", "user_id", "event_type", "value",
-                 "props", "bucket")
-         # pin once: the first consumer (invariant collect or the
-         # first bucket write) materializes the lazy checkpoint and
-         # every later bucket write reads the persisted blocks — the
-         # global sort still runs exactly once, without a dedicated
-         # checkpoint job (r12 job-fold)
-         .localCheckpoint(eager=False))
-    # The invariant re-check costs two extra Spark actions per build
-    # on a static corpus (ADVICE r6): skip it when the gate latency
-    # matters via SPARK_GRAFT_SKIP_STAGE_ASSERTS=1 (default: on —
-    # safety over speed; pytest exercises both paths implicitly).
-    if os.environ.get("SPARK_GRAFT_SKIP_STAGE_ASSERTS") == "1":
-        assert_tick_ms = None
-    if assert_tick_ms is not None:
-        per = (b.withColumn("k", F.expr(assert_key_expr))
-               .groupBy("bucket")
-               .agg(F.max(F.expr("ts div 1000")).alias("mx"),
-                    F.countDistinct("k").alias("nk"))
-               .orderBy("bucket").collect())
-        n_keys = (b.select(F.expr(assert_key_expr).alias("k"))
-                  .distinct().count())
-        assert len(per) == n_files and all(r["nk"] == n_keys for r in per), (
-            f"multibatch oracle invariant broken: not every key appears in "
-            f"every bucket ({[(r['bucket'], r['nk']) for r in per]} vs "
-            f"{n_keys} keys) — the fires-every-batch closed form no longer "
-            f"models the replay; restage or fix the oracle")
-        jumps = [per[k]["mx"] - per[k - 1]["mx"] for k in range(1, len(per))]
-        assert min(jumps) > assert_tick_ms, (
-            f"multibatch oracle invariant broken: consecutive-bucket "
-            f"watermark jumps {jumps} do not all exceed the tick interval "
-            f"{assert_tick_ms} ms — partial-fire attribution would diverge")
-    work = tempfile.mkdtemp(prefix="sgs_qstage_work_")
-    d = tempfile.mkdtemp(prefix="sgs_qstaged_")
-    base = 1_700_000_000
-    for k in range(n_files):
-        sub = os.path.join(work, f"b{k}")
-        (b.filter(F.col("bucket") == k).drop("bucket")
-         .coalesce(1).write.mode("overwrite").parquet(sub))
-        part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
-        dst = os.path.join(d, f"part-{k:05d}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (base + k, base + k))
-    shutil.rmtree(work, ignore_errors=True)
-    src = (
-        spark.readStream.schema(
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    return src.withColumn("ts", F.timestamp_micros("ts"))
+    def write(ev, d):
+        n = ev.count()
+        b = (ev.withColumn("rn", F.row_number().over(
+                Window.orderBy("ts", "event_id")))
+             .withColumn("bucket",
+                         F.expr(f"CAST(((rn - 1) * {n_files}) DIV {n} AS INT)"))
+             .select("event_id", "ts", "user_id", "event_type", "value",
+                     "props", "bucket")
+             # pin once: the first consumer (invariant collect or the
+             # first bucket write) materializes the lazy checkpoint and
+             # every later bucket write reads the persisted blocks — the
+             # global sort still runs exactly once, without a dedicated
+             # checkpoint job (r12 job-fold)
+             .localCheckpoint(eager=False))
+        # the invariant re-check costs two extra Spark actions per
+        # build on a static corpus (ADVICE r6)
+        if assert_tick_ms is not None:
+            per = (b.withColumn("k", F.expr(assert_key_expr))
+                   .groupBy("bucket")
+                   .agg(F.max(F.expr("ts div 1000")).alias("mx"),
+                        F.countDistinct("k").alias("nk"))
+                   .orderBy("bucket").collect())
+            n_keys = (b.select(F.expr(assert_key_expr).alias("k"))
+                      .distinct().count())
+            assert len(per) == n_files and all(r["nk"] == n_keys for r in per), (
+                f"multibatch oracle invariant broken: not every key appears in "
+                f"every bucket ({[(r['bucket'], r['nk']) for r in per]} vs "
+                f"{n_keys} keys) — the fires-every-batch closed form no longer "
+                f"models the replay; restage or fix the oracle")
+            jumps = [per[k]["mx"] - per[k - 1]["mx"] for k in range(1, len(per))]
+            assert min(jumps) > assert_tick_ms, (
+                f"multibatch oracle invariant broken: consecutive-bucket "
+                f"watermark jumps {jumps} do not all exceed the tick interval "
+                f"{assert_tick_ms} ms — partial-fire attribution would diverge")
+        work = tempfile.mkdtemp(prefix="sgs_qstage_work_")
+        for k in range(n_files):
+            sub = os.path.join(work, f"b{k}")
+            (b.filter(F.col("bucket") == k).drop("bucket")
+             .coalesce(1).write.mode("overwrite").parquet(sub))
+            part = glob.glob(os.path.join(sub, "part-*.parquet"))[0]
+            shutil.copy(part, os.path.join(d, f"part-{k:05d}.parquet"))
+        shutil.rmtree(work, ignore_errors=True)
+
+    return _replay_staged(spark, sf_dir, write)
 
 
 @register(
@@ -5834,17 +5787,24 @@ def customer_rfm_segments(spark, sf_dir):
          .otherwise("regular"))
 
 
-def _staged_events_stream(spark, sf_dir, n_files: int = 4):
-    """Stage the events table as n_files parquet files and stream them
-    one per micro-batch — a REAL multi-batch replay (the single-file
-    testdata layout would otherwise collapse to one batch)."""
+def _replay_staged(spark, sf_dir, write):
+    """Stage the events table with `write(events, d)` into a fresh
+    directory `d` (ts as BIGINT micros, so the replay does not depend
+    on how parquet timestamps are read back) and stream its files one
+    per micro-batch, ts restored to a timestamp. FileStreamSource picks
+    up pre-existing files oldest-first (path order breaks mtime ties),
+    so the part files get ascending mtimes in name order: batch k is
+    file k."""
+    import glob
+    import os
     import tempfile
 
     d = tempfile.mkdtemp(prefix="sgs_staged_")
-    (load_table(spark, sf_dir, "events")
-     .withColumn("ts", F.expr("unix_micros(ts)"))  # stage as BIGINT micros
-     .repartition(n_files)
-     .write.mode("overwrite").parquet(d))
+    write(load_table(spark, sf_dir, "events")
+          .withColumn("ts", F.expr("unix_micros(ts)")), d)
+    base = 1_700_000_000
+    for i, f in enumerate(sorted(glob.glob(os.path.join(d, "part-*")))):
+        os.utime(f, (base + i, base + i))
     src = (
         spark.readStream.schema(
             "event_id bigint, ts bigint, user_id bigint, event_type string, "
@@ -5852,6 +5812,15 @@ def _staged_events_stream(spark, sf_dir, n_files: int = 4):
         .option("maxFilesPerTrigger", 1).parquet(d)
     )
     return src.withColumn("ts", F.timestamp_micros("ts"))
+
+
+def _staged_events_stream(spark, sf_dir, n_files: int = 4):
+    """Stage the events table as n_files parquet files and stream them
+    one per micro-batch — a REAL multi-batch replay (the single-file
+    testdata layout would otherwise collapse to one batch)."""
+    return _replay_staged(
+        spark, sf_dir,
+        lambda ev, d: ev.repartition(n_files).write.mode("overwrite").parquet(d))
 
 
 @register(
@@ -10551,34 +10520,17 @@ def _staged_events_stream_ordered(spark, sf_dir, n_files: int = 4,
                                   order_cols: tuple = ("ts", "event_id")):
     """Stage events as n_files RANGE-PARTITIONED parquet files (file k
     holds the k-th `order_cols` range) and stream them one per
-    micro-batch in order — an event-time-ORDERED multi-batch replay.
-    FileStreamSource picks up pre-existing files oldest-first (path
-    order breaks mtime ties), so both the part-file numbering and the
-    explicitly ascending mtimes pin batch k to range k. This is what
-    lets sequential-state streaming twins (CUSUM, the delta-alert
+    micro-batch in order — an event-time-ORDERED multi-batch replay
+    (_replay_staged pins batch k to file k, so to range k). This is
+    what lets sequential-state streaming twins (CUSUM, the delta-alert
     trace) hash-match their batch oracle exactly, where the unordered
     `repartition` staging can only support order-insensitive
     aggregates."""
-    import glob
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sgs_ordstaged_")
-    (load_table(spark, sf_dir, "events")
-     .withColumn("ts", F.expr("unix_micros(ts)"))
-     .repartitionByRange(n_files, *order_cols)
-     .sortWithinPartitions(*order_cols)
-     .write.mode("overwrite").parquet(d))
-    base = 1_700_000_000
-    for i, f in enumerate(sorted(glob.glob(os.path.join(d, "part-*")))):
-        os.utime(f, (base + i, base + i))
-    src = (
-        spark.readStream.schema(
-            "event_id bigint, ts bigint, user_id bigint, event_type string, "
-            "value double, props string")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    return src.withColumn("ts", F.timestamp_micros("ts"))
+    return _replay_staged(
+        spark, sf_dir,
+        lambda ev, d: (ev.repartitionByRange(n_files, *order_cols)
+                       .sortWithinPartitions(*order_cols)
+                       .write.mode("overwrite").parquet(d)))
 
 
 @register(

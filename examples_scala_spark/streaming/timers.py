@@ -15,10 +15,6 @@ Consecutive due interval ticks with no interleaving data would emit
 identical partial counts; they are coalesced into one fire at the
 latest due tick (documented delta: fewer duplicate partials, same
 final results).
-
-These run with no extra dependencies; the Spark-4
-`transformWithStateInPandas` ports of the same operators live in
-streaming/tws.py (needs protobuf).
 """
 
 from __future__ import annotations

@@ -23,3 +23,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def tmpdir(tmp_path) -> str:
+    """A fresh per-test directory as a plain path string."""
+    return str(tmp_path)

@@ -7,20 +7,11 @@ fallback, and the broadcast lifecycle in train_centroids."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from examples_scala_spark.operators import similarity as sim
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_r11_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def _emb(spark, rows):

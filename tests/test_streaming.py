@@ -10,20 +10,11 @@ batch/stream model.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 
 from examples_scala_spark.streaming import sinks, stateful
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def _sensor_stream(spark, tmpdir, rows):
@@ -350,3 +341,28 @@ def test_high_temp_counter_per_subtask_operator_state(spark, tmpdir):
     total = sum(r.op_high_count for r in
                 spark.sql("SELECT * FROM subtask_counts2").collect())
     assert total == 4  # 3 from batch files + 1 appended, accumulated
+
+
+@pytest.mark.parametrize("helper", ["_staged_events_stream_ordered",
+                                    "_staged_events_stream_quartile"])
+def test_staged_replay_batches_follow_file_order(spark, sf_dir, tmpdir,
+                                                 helper):
+    """The ordered staging helpers replay file k as micro-batch k: 4
+    non-empty batches whose (ts, event_id) ranges ascend. Losing the
+    file-order pin would interleave the ranges."""
+    from examples_scala_spark import queries
+
+    src = getattr(queries, helper)(spark, sf_dir, n_files=4)
+    spans = []
+
+    def record(batch_df, batch_id):
+        keys = sorted(batch_df.select("ts", "event_id").collect())
+        if keys:
+            spans.append((keys[0], keys[-1]))
+
+    q = (src.writeStream.foreachBatch(record)
+         .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    assert len(spans) == 4
+    assert all(spans[k][0] > spans[k - 1][1] for k in range(1, 4))

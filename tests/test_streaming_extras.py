@@ -4,10 +4,8 @@ late-drop observability (T5 streaming twin)."""
 from __future__ import annotations
 
 import os
-import shutil
 import socket
 import socketserver
-import tempfile
 import threading
 import time
 
@@ -16,13 +14,6 @@ import pytest
 
 from examples_scala_spark.operators.aggregations import avg_temp_pandas_udaf
 from examples_scala_spark.streaming import sinks, stateful
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="sgs_extra_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_temperature_rise_warning_fires(spark, tmpdir):

@@ -55,9 +55,9 @@ def main() -> None:
         df = spec.fn(spark, sf_dir)
         with open(path, "w") as f:
             # record the environment the plan shape depends on
-            # (_rebalance_scan keys off defaultParallelism vs the
-            # fixture's scan split count — r12 ADVICE: make cross-host
-            # plan diffs interpretable)
+            # (AQE partition coalescing and scan splits follow
+            # defaultParallelism — r12 ADVICE: make cross-host plan
+            # diffs interpretable)
             f.write(f"# defaultParallelism={spark.sparkContext.defaultParallelism} "
                     f"sf_dir={sf_dir}\n")
             f.write(explain_str(df, "formatted"))
